@@ -39,8 +39,8 @@ class WindowedPairsUDTF:
     """Python UDTF emitting the reference's windowed (item, neighbor)
     pairs for one basket — the same contract as
     /root/reference/src/CrystalBallPair.java:42-63, used as a semantics
-    cross-check for the native array-expression pipeline
-    (operators/basket.py:pairs_expr).
+    cross-check for the native explode-based generator
+    (operators/basket.py:basket_pairs).
 
     Use ``F.lateral_join`` / ``SELECT ... FROM t, WindowedPairsUDTF(items)``
     style invocation. Slow path: one Python call per basket.

@@ -20,10 +20,14 @@ For a basket line ``customer p1 p2 ... pK`` (whitespace-delimited,
 
 Spark-first design (NOT a port):
 
-* Pair generation is a pure array-expression pipeline — ``transform`` /
-  ``slice`` / ``array_position`` higher-order functions build the per-basket
-  pair list inside whole-stage codegen. No self-join, no UDF, no basket id
-  needed: the stage is embarrassingly parallel (a narrow map over baskets).
+* Pair generation is two chained ``explode(sequence(...))`` generators over
+  basket positions, with ``slice`` / ``array_position`` / ``element_at``
+  bounding each window. No lambda (higher-order functions such as
+  ``transform`` are ``CodegenFallback`` and run row-at-a-time), no
+  self-join, no UDF, no basket id: both ``Generate`` nodes compile into
+  the scan's whole-stage codegen, and the stage is a narrow map over
+  baskets. ``basket_pairs`` is the one pair generator for batch,
+  streaming (``streams.cooccurrence_stream``) and the graph pins.
 * The reference's in-mapper combining (/root/reference/src/CrystalBallPair.java:66-94)
   is subsumed by Catalyst's partial hash aggregation: ``groupBy(item,
   neighbor).count()`` does map-side combine automatically.
@@ -40,40 +44,8 @@ handles skewed hot items at runtime.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-# Per-basket ordered pair generation over an `items: array<string>` column.
-# 0-based index i runs over current items (all but the last element, rule 1);
-# the window for items[i] is items[i+1..] truncated before the next
-# re-occurrence of items[i] (rule 2). `slice`/`element_at` are 1-based, hence
-# the +1/+2 offsets. array_position returns 0 when absent -> nullif/coalesce
-# turns that into "window runs to end of basket".
-_PAIRS_EXPR = """
-CASE WHEN size({items}) >= 2 THEN
-  flatten(
-    transform(
-      sequence(0, size({items}) - 2),
-      i -> transform(
-        slice(
-          {items},
-          i + 2,
-          coalesce(
-            nullif(array_position(slice({items}, i + 2, size({items})), element_at({items}, i + 1)), 0) - 1,
-            size({items})
-          )
-        ),
-        n -> struct(element_at({items}, i + 1) AS item, n AS neighbor)
-      )
-    )
-  )
-ELSE array() END
-"""
-
-
-def pairs_expr(items_col: str = "items") -> Column:
-    """Column of array<struct<item,neighbor>> — all windowed pairs of a basket."""
-    return F.expr(_PAIRS_EXPR.format(items=items_col))
 
 
 def baskets_from_text(df: DataFrame, value_col: str = "value") -> DataFrame:
@@ -128,9 +100,26 @@ def baskets_from_lineitem(lineitem: DataFrame) -> DataFrame:
 
 
 def basket_pairs(baskets: DataFrame, items_col: str = "items") -> DataFrame:
-    """All windowed (item, neighbor) occurrences, with multiplicity (O3)."""
-    return baskets.select(F.explode(pairs_expr(items_col)).alias("pr")).select(
-        F.col("pr.item").alias("item"), F.col("pr.neighbor").alias("neighbor")
+    """All windowed (item, neighbor) occurrences, with multiplicity (O3).
+
+    Two chained ``explode(sequence(...))`` generators over 1-based
+    positions: current positions ``i`` in ``1..size-1`` (rule 1; empty,
+    single-item and NULL baskets emit nothing), then neighbor positions
+    ``i+1 .. i+len``, where ``len`` stops before the next re-occurrence of
+    ``items[i]`` or runs to the end (rule 2; ``array_position`` is 0 when
+    absent and NULL for a NULL item, both meaning "to the end").
+    """
+    items, n, i, span = F.col("_items"), F.size("_items"), F.col("_i"), F.col("_len")
+    pos = F.array_position(F.slice(items, i + 1, n), F.element_at(items, i)).cast("int")
+    return (
+        baskets.select(F.col(items_col).alias("_items"))
+        .select(items, F.explode(F.when(n >= 2, F.sequence(F.lit(1), n - 1))).alias("_i"))
+        .select(
+            items, i, F.element_at(items, i).alias("item"),
+            F.coalesce(F.nullif(pos, F.lit(0)) - 1, n - i).alias("_len"),
+        )
+        .select("item", items, F.explode(F.when(span > 0, F.sequence(i + 1, i + span))).alias("_j"))
+        .select("item", F.element_at(items, F.col("_j")).alias("neighbor"))
     )
 
 

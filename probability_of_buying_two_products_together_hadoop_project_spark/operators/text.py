@@ -2291,10 +2291,12 @@ def zipf_fit(
     The rank comes from :func:`build_vocab` (the bucketed parallel
     prefix-sum — no single-partition vocabulary sort); ln values are
     quantized ONCE to 6dp decimals (the pmi/bigram-LM log rule) so the
-    five OLS sums Σx, Σy, Σxy, Σx², Σy² accumulate EXACTLY in decimal;
-    slope / intercept / r² are fixed float expressions over those
-    pinned sums (one more correctly-rounded op each — never iterated
-    float arithmetic). Shuffle: the token count (map-side combined,
+    five OLS sums Σx, Σy, Σxy, Σx², Σy² accumulate EXACTLY in decimal,
+    and so do the n-scaled co-moments n·Σxy − Σx·Σy (and the two
+    variances) — a flat spectrum fits slope 0 exactly and a
+    non-increasing one never a positive slope; slope / intercept / r²
+    are fixed float expressions over those pinned values (one more
+    correctly-rounded op each — never iterated float arithmetic). Shuffle: the token count (map-side combined,
     the only corpus-sized term), the vocab prefix-sum, one 1-row
     reduce.
 
@@ -2322,11 +2324,22 @@ def zipf_fit(
     )
     nf = F.col("n_types").cast("double")
     sx, sy = F.col("_sx").cast("double"), F.col("_sy").cast("double")
-    sxy = F.col("_sxy").cast("double")
-    sxx, syy = F.col("_sxx").cast("double"), F.col("_syy").cast("double")
-    cov_n = nf * sxy - sx * sy  # n-scaled covariance, one expression
-    varx_n = nf * sxx - sx * sx
-    vary_n = nf * syy - sy * sy
+    n0 = F.col("n_types").cast("decimal(10,0)")
+    # Σx, Σy are sums of 6dp values, so they narrow to 6dp exactly
+    sx6, sy6 = F.col("_sx").cast(d6), F.col("_sy").cast(d6)
+
+    def _comoment(s_ab: str, a: Column, b: Column) -> Column:
+        # n·Σab − Σa·Σb, exact in decimal(38,12) (each product fits 37
+        # digits, so no precision-loss rescale), then ONE cast to double:
+        # a flat spectrum gives exactly 0, never float cancellation noise
+        return (
+            (n0 * F.col(s_ab).cast("decimal(27,12)")).cast("decimal(37,12)")
+            - (a * b).cast("decimal(37,12)")
+        ).cast("double")
+
+    cov_n = _comoment("_sxy", sx6, sy6)  # n-scaled covariance
+    varx_n = _comoment("_sxx", sx6, sx6)
+    vary_n = _comoment("_syy", sy6, sy6)
     slope = F.when((F.col("n_types") >= 2) & (varx_n > 0), cov_n / varx_n)
     return s.select(
         "n_types",

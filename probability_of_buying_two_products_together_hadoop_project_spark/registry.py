@@ -13939,40 +13939,36 @@ def q_kendall_tau(spark, sf_dir):
              sum(CAST(x * x AS DECIMAL(38,12))) AS sxx,
              sum(CAST(y * y AS DECIMAL(38,12))) AS syy
       FROM p
+    ), m AS (
+      -- n·Σab − Σa·Σb exact in decimal, cast to double through text
+      -- (a correctly-rounded parse; a wide decimal's direct cast is not)
+      SELECT n_types, n_tokens,
+        CAST(n_types AS DOUBLE) AS nf,
+        CAST(sx AS DOUBLE) AS sxf,
+        CAST(sy AS DOUBLE) AS syf,
+        CAST(CAST(CAST(CAST(n_types AS DECIMAL(10,0))
+                         * CAST(sxy AS DECIMAL(27,12)) AS DECIMAL(37,12))
+                  - CAST(CAST(sx AS DECIMAL(18,6)) * CAST(sy AS DECIMAL(18,6))
+                         AS DECIMAL(37,12)) AS VARCHAR) AS DOUBLE) AS cov_n,
+        CAST(CAST(CAST(CAST(n_types AS DECIMAL(10,0))
+                         * CAST(sxx AS DECIMAL(27,12)) AS DECIMAL(37,12))
+                  - CAST(CAST(sx AS DECIMAL(18,6)) * CAST(sx AS DECIMAL(18,6))
+                         AS DECIMAL(37,12)) AS VARCHAR) AS DOUBLE) AS varx_n,
+        CAST(CAST(CAST(CAST(n_types AS DECIMAL(10,0))
+                         * CAST(syy AS DECIMAL(27,12)) AS DECIMAL(37,12))
+                  - CAST(CAST(sy AS DECIMAL(18,6)) * CAST(sy AS DECIMAL(18,6))
+                         AS DECIMAL(37,12)) AS VARCHAR) AS DOUBLE) AS vary_n
+      FROM s
     )
     SELECT n_types, n_tokens,
-      CASE WHEN n_types >= 2 AND CAST(n_types AS DOUBLE) * CAST(sxx AS DOUBLE)
-             - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0 THEN
-        (CAST(n_types AS DOUBLE) * CAST(sxy AS DOUBLE)
-           - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        / (CAST(n_types AS DOUBLE) * CAST(sxx AS DOUBLE)
-           - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-      END AS slope,
-      CASE WHEN n_types >= 2 AND CAST(n_types AS DOUBLE) * CAST(sxx AS DOUBLE)
-             - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0 THEN
-        (CAST(sy AS DOUBLE)
-           - ((CAST(n_types AS DOUBLE) * CAST(sxy AS DOUBLE)
-               - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-              / (CAST(n_types AS DOUBLE) * CAST(sxx AS DOUBLE)
-                 - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-             * CAST(sx AS DOUBLE))
-        / CAST(n_types AS DOUBLE)
+      CASE WHEN n_types >= 2 AND varx_n > 0 THEN cov_n / varx_n END AS slope,
+      CASE WHEN n_types >= 2 AND varx_n > 0 THEN
+        (syf - (cov_n / varx_n) * sxf) / nf
       END AS intercept,
-      CASE WHEN n_types >= 2
-             AND CAST(n_types AS DOUBLE) * CAST(sxx AS DOUBLE)
-                 - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0
-             AND CAST(n_types AS DOUBLE) * CAST(syy AS DOUBLE)
-                 - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0 THEN
-        (CAST(n_types AS DOUBLE) * CAST(sxy AS DOUBLE)
-           - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        * (CAST(n_types AS DOUBLE) * CAST(sxy AS DOUBLE)
-           - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        / ((CAST(n_types AS DOUBLE) * CAST(sxx AS DOUBLE)
-            - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-           * (CAST(n_types AS DOUBLE) * CAST(syy AS DOUBLE)
-              - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
+      CASE WHEN n_types >= 2 AND varx_n > 0 AND vary_n > 0 THEN
+        cov_n * cov_n / (varx_n * vary_n)
       END AS r2
-    FROM s
+    FROM m
     """,
     "Zipf's-law rank-frequency fit over the corpus vocabulary — the "
     "corpus-health diagnostic (natural language gives slope ≈ -1 on "
@@ -13981,9 +13977,9 @@ def q_kendall_tau(spark, sf_dir):
     "bucketed parallel prefix-sum (build_vocab — never a single-"
     "partition vocabulary sort; the oracle states the same ranking as "
     "the naive window); ln values quantize ONCE to 6dp decimals (the "
-    "pmi/bigram-LM log rule) so the five OLS sums are exact decimal "
-    "reductions, and slope/intercept/r2 are fixed float expressions "
-    "over those pinned sums",
+    "pmi/bigram-LM log rule) so the five OLS sums and the n-scaled "
+    "co-moments are exact decimals, and slope/intercept/r2 are fixed "
+    "float expressions over those pinned values",
 )
 def q_zipf_fit(spark, sf_dir):
     return text.zipf_fit(_t(spark, sf_dir, "documents"), min_count=1)

@@ -128,8 +128,9 @@ class BasketTextWriter(DataSourceWriter):
             os.replace(m.path, os.path.join(os.path.dirname(m.path), final))
 
     def abort(self, messages) -> None:
+        # Spark passes None for the tasks that failed before returning one
         for m in messages:
-            if os.path.exists(m.path):
+            if m is not None and os.path.exists(m.path):
                 os.remove(m.path)
 
 

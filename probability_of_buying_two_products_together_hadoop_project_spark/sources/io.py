@@ -93,8 +93,13 @@ def write_reference_pairs_layout(pairs: DataFrame, out_dir: str) -> list[str]:
     committed goldens. Returns the three file paths (part-r-00000..2).
 
     This is a parity artifact, not a scale path: real output goes to
-    Parquet. The per-partition ``coalesce(1)`` mirrors the reference's
-    one-file-per-reducer contract.
+    Parquet. One Spark job collects every row with its file index (the
+    reference's one-file-per-reducer contract), then Python sorts them by
+    the UTF-8 bytes of (item, neighbor), which is Spark's string order, so
+    ``pairs`` is computed once and no range-sort exchange runs. The
+    price is driver memory: every row, with its item and neighbor beside
+    the line, is held at once, about three times the peak of a writer
+    that collects one file's lines at a time.
     """
     import os
 
@@ -105,23 +110,18 @@ def write_reference_pairs_layout(pairs: DataFrame, out_dir: str) -> list[str]:
         F.lit("]\t"), F.col("prob").cast("string"),
     ).alias("line")
     item_int = F.col("item").cast("int")
+    part = F.when(item_int < 30, 0).when(item_int < 60, 1).when(item_int >= 60, 2)
+    rows = (
+        pairs.select(part.alias("part"), "item", "neighbor", line)
+        .filter(F.col("part").isNotNull())
+        .collect()
+    )
+    rows.sort(key=lambda r: (r["item"].encode(), r["neighbor"].encode()))
     os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for idx, pred in enumerate(
-        [item_int < 30, (item_int >= 30) & (item_int < 60), item_int >= 60]
-    ):
-        rows = (
-            pairs.filter(pred)
-            .orderBy("item", "neighbor")
-            .select(line)
-            .coalesce(1)
-            .collect()
-        )
-        p = os.path.join(out_dir, f"part-r-{idx:05d}")
+    paths = [os.path.join(out_dir, f"part-r-{idx:05d}") for idx in range(3)]
+    for idx, p in enumerate(paths):
         with open(p, "w") as f:
-            for r in rows:
-                f.write(r["line"] + "\n")
-        paths.append(p)
+            f.writelines(r["line"] + "\n" for r in rows if r["part"] == idx)
     return paths
 
 

@@ -93,17 +93,15 @@ def cooccurrence_stream(baskets: DataFrame) -> DataFrame:
     """Streaming Crystal Ball: incremental windowed-pair counts over a
     stream of baskets (customer, items array).
 
-    The pair generation is the SAME array expression as the batch operator
-    (operators/basket.py) — one logical plan, two execution modes; the
-    running groupBy count is classic streaming state. Downstream consumers
-    normalize to probabilities per item (complete/update output modes).
+    The pair generation is the SAME generator as the batch operator
+    (``operators.basket.basket_pairs``) — one logical plan, two execution
+    modes; the running groupBy count is classic streaming state. Downstream
+    consumers normalize to probabilities per item (complete/update output
+    modes).
     """
-    from ..operators.basket import pairs_expr
+    from ..operators.basket import cooccurrence_counts
 
-    pairs = baskets.select(F.explode(pairs_expr("items")).alias("pr")).select(
-        F.col("pr.item").alias("item"), F.col("pr.neighbor").alias("neighbor")
-    )
-    return pairs.groupBy("item", "neighbor").agg(F.count(F.lit(1)).alias("pair_cnt"))
+    return cooccurrence_counts(baskets)
 
 
 def dedup_stream(

@@ -11,6 +11,7 @@ from collections import Counter
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from probability_of_buying_two_products_together_hadoop_project_spark.functions import udfs
 from probability_of_buying_two_products_together_hadoop_project_spark.operators import basket
 
 
@@ -72,6 +73,37 @@ def test_invariants(spark, basket_lists):
 def test_single_item_and_empty_baskets_emit_nothing(spark):
     df = spark.createDataFrame([(["7"],), ([],)], "items: array<string>")
     assert basket.cooccurrence_counts(df).count() == 0
+
+
+EDGE_BASKETS = [
+    None,  # NULL items array
+    [],
+    ["7"],
+    ["x", "x"],  # adjacent repeat: the window is empty
+    ["a", "x", "x", "b", "x"],
+    ["5", "5", "5", "5"],  # all-same
+    ["1", "2", "1", "2", "1"],
+    ["3", "4", "4", "3", "3", "4"],
+]
+
+
+def test_edge_baskets_match_simulator_and_udtf(spark):
+    """The explode-based generator, the reference loop and the Python UDTF
+    agree on the baskets where window bounds degenerate."""
+    expected = Counter()
+    for items in EDGE_BASKETS:
+        expected.update(simulate_pairs(items or []))
+    df = spark.createDataFrame([(b,) for b in EDGE_BASKETS], "items: array<string>")
+    got = Counter((r["item"], r["neighbor"]) for r in basket.basket_pairs(df).collect())
+    spark.udtf.register("windowed_pairs", udfs.WindowedPairsUDTF)
+    df.createOrReplaceTempView("edge_baskets")
+    via_udtf = Counter(
+        (r["item"], r["neighbor"])
+        for r in spark.sql(
+            "SELECT p.* FROM edge_baskets, LATERAL windowed_pairs(items) p"
+        ).collect()
+    )
+    assert got == via_udtf == expected
 
 
 def test_text_parsing_roundtrip(spark):

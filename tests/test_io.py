@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from probability_of_buying_two_products_together_hadoop_project_spark.sources import io
 from probability_of_buying_two_products_together_hadoop_project_spark.operators import basket
+from tests.test_basket_golden import INPUT_LINES
 
 
 def _nation(spark, sf_smoke):
@@ -138,6 +139,13 @@ def test_basket_text_datasource_matches_text_parser(spark, tmp_path):
     assert got[("1", "2")] == 2 and got[("2", "1")] == 2
 
 
+def _golden_input(tmp_path) -> str:
+    """The reference's two golden basket lines as a one-file input."""
+    path = tmp_path / "input"
+    path.write_text("".join(line + "\n" for line in INPUT_LINES))
+    return str(path)
+
+
 def test_basket_text_datasource_write_roundtrip(spark, tmp_path):
     """write via the DataSource sink, read back via its reader: identical
     baskets (order-insensitive; the format has no row-order contract)."""
@@ -145,7 +153,7 @@ def test_basket_text_datasource_write_roundtrip(spark, tmp_path):
         basket_datasource,
     )
 
-    src = basket_datasource.read_baskets(spark, "/root/reference/input/input")
+    src = basket_datasource.read_baskets(spark, _golden_input(tmp_path))
     out = str(tmp_path / "out")
     src.write.format("basket_text").option("path", out).mode("append").save()
     import os
@@ -169,7 +177,7 @@ def test_basket_text_datasource_overwrite_and_stragglers(spark, tmp_path):
     )
 
     out = str(tmp_path / "out")
-    src = basket_datasource.read_baskets(spark, "/root/reference/input/input")
+    src = basket_datasource.read_baskets(spark, _golden_input(tmp_path))
     src.write.format("basket_text").option("path", out).mode("append").save()
     n_first = len(os.listdir(out))
     assert n_first > 0
@@ -186,6 +194,21 @@ def test_basket_text_datasource_overwrite_and_stragglers(spark, tmp_path):
     b = {(r["customer"], tuple(r["items"])) for r in back.collect()}
     assert a == b
     assert "Ghost" not in {r["customer"] for r in back.collect()}
+
+
+def test_basket_text_writer_abort_skips_failed_tasks(tmp_path):
+    """Spark hands abort() None for every task that failed before
+    returning a commit message; abort must still remove the others' temp
+    files instead of raising AttributeError over the real write error."""
+    from probability_of_buying_two_products_together_hadoop_project_spark.sources import (
+        basket_datasource,
+    )
+
+    w = basket_datasource.BasketTextWriter({"path": str(tmp_path)}, overwrite=False)
+    msg = w.write(iter([]))
+    assert os.path.exists(msg.path)
+    w.abort([None, msg])
+    assert not os.path.exists(msg.path)
 
 
 def test_basket_text_stream_reader_offsets(tmp_path):

@@ -44,6 +44,24 @@ def test_cooccurrence_single_pair_exchange(spark, sf_smoke):
     assert n == 3, f"flagship must be exactly 3 exchanges, got {n}"
 
 
+def test_basket_pairs_generators_are_whole_stage_codegen(spark):
+    """Pair generation compiles: no lambda (higher-order functions are
+    CodegenFallback, evaluated row-at-a-time), and both Generate nodes
+    sit inside WholeStageCodegen (prefixed ``*(n)``)."""
+    df = spark.createDataFrame([("Mary 34 56 29 34",)], ["value"])
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        pairs = basket.basket_pairs(basket.baskets_from_text(df))
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert "lambdafunction" not in plan.lower(), plan
+    gens = [l.lstrip("+- :") for l in plan.splitlines() if "Generate explode" in l]
+    assert len(gens) == 2, plan
+    assert all(g.startswith("*(") for g in gens), plan
+
+
 def test_cooccurrence_bucketed_layout_drops_basket_exchange(spark, sf_smoke, tmp_path):
     """lineitem bucketed by l_orderkey: the basket-build groupBy reads
     pre-clustered buckets, so the dominant exchange disappears (the 100 TB

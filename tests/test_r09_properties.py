@@ -4,7 +4,7 @@ randomized corpora drive both the Spark operators and independent
 pure-Python simulators (the test_drift_properties pattern)."""
 
 import math
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import ROUND_HALF_UP, Decimal, localcontext
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -32,19 +32,20 @@ def _py_zipf(freqs):
         for rk, (_, n) in enumerate(ranked, start=1)
     ]
     n = len(pts)
-    sx = float(sum(p[0] for p in pts))
-    sy = float(sum(p[1] for p in pts))
-    sxy = float(sum(p[0] * p[1] for p in pts))
-    sxx = float(sum(p[0] * p[0] for p in pts))
-    syy = float(sum(p[1] * p[1] for p in pts))
+    with localcontext(prec=60):  # exact: every term has at most 12dp
+        sx = sum(p[0] for p in pts)
+        sy = sum(p[1] for p in pts)
+        sxy = sum(p[0] * p[1] for p in pts)
+        sxx = sum(p[0] * p[0] for p in pts)
+        syy = sum(p[1] * p[1] for p in pts)
+        cov_n = float(n * sxy - sx * sy)
+        varx_n = float(n * sxx - sx * sx)
+        vary_n = float(n * syy - sy * sy)
     nf = float(n)
-    cov_n = nf * sxy - sx * sy
-    varx_n = nf * sxx - sx * sx
-    vary_n = nf * syy - sy * sy
     if n < 2 or varx_n <= 0:
         return None, None, None
     slope = cov_n / varx_n
-    icept = (sy - slope * sx) / nf
+    icept = (float(sy) - slope * float(sx)) / nf
     r2 = cov_n * cov_n / (varx_n * vary_n) if vary_n > 0 else None
     return slope, icept, r2
 

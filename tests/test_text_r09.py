@@ -2,7 +2,7 @@
 and the Gopher per-rule quality screen."""
 
 import math
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import ROUND_HALF_UP, Decimal, localcontext
 
 from pyspark.sql import functions as F
 
@@ -18,20 +18,22 @@ def _q6(x: float) -> Decimal:
 
 
 def _zipf_reference(freqs):
-    """Python OLS replica with the operator's 6dp-log quantization."""
+    """Python OLS replica with the operator's 6dp-log quantization and
+    exact decimal co-moments."""
     ranked = sorted(freqs.items(), key=lambda kv: (-kv[1], kv[0]))
     pts = [
         (_q6(math.log(rk)), _q6(math.log(n)))
         for rk, (_, n) in enumerate(ranked, start=1)
     ]
     n = len(pts)
-    sx = sum(p[0] for p in pts)
-    sy = sum(p[1] for p in pts)
-    sxy = sum(p[0] * p[1] for p in pts)
-    sxx = sum(p[0] * p[0] for p in pts)
+    with localcontext(prec=60):  # exact: every term has at most 12dp
+        sx = sum(p[0] for p in pts)
+        sy = sum(p[1] for p in pts)
+        sxy = sum(p[0] * p[1] for p in pts)
+        sxx = sum(p[0] * p[0] for p in pts)
+        cov_n = float(n * sxy - sx * sy)
+        varx_n = float(n * sxx - sx * sx)
     nf, sxf, syf = float(n), float(sx), float(sy)
-    cov_n = nf * float(sxy) - sxf * syf
-    varx_n = nf * float(sxx) - sxf * sxf
     slope = cov_n / varx_n
     intercept = (syf - slope * sxf) / nf
     return slope, intercept
