@@ -2,7 +2,8 @@
 
 Runs the headline queries from ``__spark_entry__.queries()`` against
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]``, writes the full per-query + shuffle
+``local[$SPARK_GRAFT_CPUS]`` (default: the host's CPU count, recorded
+next to it as ``cpus_host``), writes the full per-query + shuffle
 detail to ``BENCH.json`` (override with ``$SPARK_GRAFT_BENCH_OUT``),
 and prints ONE compact JSON line to stdout (the 12-query BASELINE.md
 core — small enough for the driver's tail capture to parse whole):
@@ -487,7 +488,8 @@ def main() -> None:
     # total next to the raw one. Round-over-round comparisons read the
     # normalized figure; per-query regressions still gate on shuffle
     # bytes via bench_diff.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # the core count get_spark ran at: $SPARK_GRAFT_CPUS, else the host's
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     host_factor = None
     host_pool_n = 0
     try:
@@ -530,6 +532,7 @@ def main() -> None:
         "shuffle_bytes": shuffle,
         "sf": sf,
         "cpus": int(cpus) if cpus.isdigit() else cpus,
+        "cpus_host": os.cpu_count(),
         "pin_builds": pin_builds,
         "pin_total_sec": pin_total,
         "cold_total_sec": round(total + pin_total, 3),

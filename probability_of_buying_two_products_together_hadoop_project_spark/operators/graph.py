@@ -1293,6 +1293,10 @@ def scan_clusters(
 
     if mu < 1 or label_rounds < 1:
         raise ValueError("mu and label_rounds must be >= 1")
+    if not (1 <= eps_rank_num < eps_rank_den):
+        raise ValueError(
+            f"need 1 <= eps_rank_num < eps_rank_den, got {eps_rank_num}/{eps_rank_den}"
+        )
     if sim is None:
         sim = scan_edge_similarity(pairs, a_col, b_col).localCheckpoint(
             eager=True
@@ -1572,11 +1576,21 @@ def truss_peel(
         def _pk(lo: str, hi: str):
             return F.col(lo).cast("long") * _p + F.col(hi).cast("long")
 
+        def _pk_checked(lo: str, hi: str):
+            # the gate read sup's id range, not tri0's: an id outside
+            # [0, 2^31) would alias another edge's key, so fail the job
+            lo_c, hi_c = F.col(lo).cast("long"), F.col(hi).cast("long")
+            ok = lo_c.between(0, (1 << 31) - 1) & hi_c.between(0, (1 << 31) - 1)
+            msg = F.format_string(
+                "truss_peel: tri0 edge (%s, %s) outside [0, 2^31)", lo_c, hi_c
+            )
+            return F.when(ok, _pk(lo, hi)).otherwise(F.raise_error(msg))
+
         keyed_sup = sup.select(_pk("lo", "hi").alias("e"), "sup")
         tri = tri.select(
-            _pk("lo1", "hi1").alias("e1"),
-            _pk("lo2", "hi2").alias("e2"),
-            _pk("lo3", "hi3").alias("e3"),
+            _pk_checked("lo1", "hi1").alias("e1"),
+            _pk_checked("lo2", "hi2").alias("e2"),
+            _pk_checked("lo3", "hi3").alias("e3"),
         )
         keys = ["e"]
     else:

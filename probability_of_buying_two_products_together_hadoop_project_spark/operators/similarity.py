@@ -854,15 +854,11 @@ def quantize_int8(
     )
 
 
-# Arrow-kernel gate for the Lloyd rounds (guide §4.2, the entropy
-# precedent): centroid state is k x dim integers held by the driver
-# between rounds — bounded by PARAMETERS, not data — so cap the cells
-# and keep the relational loop for anything larger (or for ragged seed
-# vectors, whose per-position join semantics the dense matrix cannot
-# reproduce). _KMEANS_FORCE_RELATIONAL is the test hook pinning
-# kernel-vs-relational bit-equality (the FS-EM fold precedent).
-_KMEANS_KERNEL_MAX_CELLS = 65536
-_KMEANS_FORCE_RELATIONAL = False
+# Byte budget for each temporary array of the k-means/SemDeDup kernel:
+# the rows x k x dim int64 distance diffs and the screen's block x m
+# dot block are built in row chunks that stay under it, whatever the
+# corpus size, k, dim or cluster size.
+_KMEANS_KERNEL_BYTES = 32 << 20
 
 
 def _kmeans_trunc_div(s: int, n: int) -> int:
@@ -871,32 +867,133 @@ def _kmeans_trunc_div(s: int, n: int) -> int:
     return s // n if s >= 0 else -((-s) // n)
 
 
-def _kmeans_quantize(vals) -> "object":
-    """floor(float32 -> float64 widen * unit) as int64 — the exact same
-    three IEEE ops the relational path's quantize expression performs."""
+def _kmeans_check_bound(big, dim: int) -> None:
+    """Raise unless ``(2 * big)^2 * dim < 2^63``: with ``big`` the
+    largest |component| involved, every int64 distance, dot and norm of
+    ``dim``-long quantized vectors is then exact (NumPy int64 wraps
+    silently where Spark's ANSI long arithmetic raised)."""
+    if not (2.0 * float(big)) ** 2 * dim < 2.0**63:
+        raise ValueError(
+            f"k-means: quantized components up to {big} at dim {dim} break "
+            "the int64 bound (2*max|q|)^2*dim < 2^63; lower unit"
+        )
+
+
+def _kmeans_quantize(vals, unit: int):
+    """floor(float64(v) * float(unit)) as int64 for equal-length
+    vectors — the same IEEE ops as the SQL twin's quantize expression.
+    A NULL element (NaN after Arrow conversion) raises instead of
+    casting to INT64_MIN, and so does any vector past the overflow
+    bound."""
     import numpy as np
 
-    return np.floor(
-        np.asarray(vals, dtype=np.float64) * 1.0e6
-    ).astype(np.int64)
+    f = np.floor(np.asarray(vals, dtype=np.float64) * float(unit))
+    if np.isnan(f).any():
+        raise ValueError("k-means: vector has a NULL or NaN element")
+    _kmeans_check_bound(np.abs(f).max(initial=0.0), f.shape[1])
+    return f.astype(np.int64)
 
 
-def _kmeans_kernel_state(
+def _kmeans_length_groups(vectors: list, unit: int):
+    """Yield (row indices, quantized rows x L matrix) per distinct
+    vector length L. NULL and empty vectors have no positions: they are
+    skipped, so they are never assigned."""
+    import numpy as np
+
+    bylen: dict[int, list[int]] = {}
+    for i, v in enumerate(vectors):
+        if v is not None and len(v):
+            bylen.setdefault(len(v), []).append(i)
+    for idx in bylen.values():
+        yield np.asarray(idx), _kmeans_quantize([vectors[i] for i in idx], unit)
+
+
+def _kmeans_chunks(n: int, row_cells: int):
+    """Slices over ``n`` rows whose int64 temporaries of ``row_cells``
+    cells per row stay under ``_KMEANS_KERNEL_BYTES`` (one row at
+    least)."""
+    step = max(1, _KMEANS_KERNEL_BYTES // (8 * row_cells))
+    return (slice(r0, min(n, r0 + step)) for r0 in range(0, n, step))
+
+
+def _kmeans_nearest(Q, cents: list):
+    """Exact nearest centroid for the equal-length quantized points
+    ``Q`` (rows x L). ``cents`` holds the cid-sorted int64 centroid
+    vectors, each of its own length; the distance to centroid i sums
+    (q - c)^2 over pos < min(L, len(c_i)), and argmin keeps the first
+    minimum, so ties go to the smaller cid. Rows run in chunks that keep
+    the rows x k x dim temporaries under ``_KMEANS_KERNEL_BYTES``.
+    Returns (index into ``cents``, d2) as int64 arrays."""
+    import numpy as np
+
+    n, L = Q.shape
+    by_m: dict[int, list[int]] = {}
+    for i, c in enumerate(cents):
+        by_m.setdefault(min(L, len(c)), []).append(i)
+    groups = [
+        (m, ix, np.stack([cents[i][:m] for i in ix])) for m, ix in by_m.items()
+    ]
+    big_c = max(int(np.abs(M).max()) for _, _, M in groups)
+    width = max(by_m)
+    a = np.empty(n, dtype=np.int64)
+    d2 = np.empty(n, dtype=np.int64)
+    for sl in _kmeans_chunks(n, len(cents) * width):
+        V = Q[sl]
+        _kmeans_check_bound(max(int(np.abs(V).max()), big_c), width)
+        D = np.empty((len(V), len(cents)), dtype=np.int64)
+        for m, ix, M in groups:
+            D[:, ix] = ((V[:, None, :m] - M[None]) ** 2).sum(axis=2)
+        a[sl] = D.argmin(axis=1)
+        d2[sl] = D[np.arange(len(V)), a[sl]]
+    return a, d2
+
+
+def _kmeans_kernel_partials(cents: list, cids: list, unit: int):
+    """mapInPandas closure for one Lloyd round: assign each vector to
+    its nearest centroid and emit per-(cid, pos) partial (count, sum)
+    rows for pos < min(len(v), len(c)) — so a position's count is the
+    members long enough to reach it."""
+    import pandas as pd
+
+    def fn(batches):
+        for pdf in batches:
+            out_c, out_p, out_n, out_s = [], [], [], []
+            for _, Q in _kmeans_length_groups(pdf.iloc[:, 0].tolist(), unit):
+                a, _ = _kmeans_nearest(Q, cents)
+                for ci in set(a.tolist()):
+                    mask = a == ci
+                    m = min(Q.shape[1], len(cents[ci]))
+                    out_c += [cids[ci]] * m
+                    out_p += range(m)
+                    out_n += [int(mask.sum())] * m
+                    out_s += Q[mask, :m].sum(axis=0).tolist()
+            yield pd.DataFrame(
+                {"cid": out_c, "pos": out_p, "_n": out_n, "_s": out_s}
+            )
+
+    return fn
+
+
+def _kmeans_train(
     embeddings: DataFrame,
     k: int,
+    iters: int,
     id_col: str,
     vec_col: str,
     unit: int,
     seed_tag: str,
 ):
-    """Collect the md5-draw seed vectors (<= k rows, bounded) and build
-    the dense int64 centroid matrix, or return None when the kernel
-    gate fails (non-1e6 unit, ragged/NULL seeds, k*dim over the cap,
-    empty input) — the caller then uses the relational loop."""
+    """Seed and run ``iters`` Lloyd rounds; returns (cids, centroids,
+    n_members), the last two as per-cid int64 arrays of the seed's
+    length. Seeding collects the <= k md5-draw seed rows; a NULL or
+    empty seed keeps its cid slot but has no positions, so it is
+    dropped. Each round is one Arrow corpus pass emitting partial sums,
+    one small aggregate collected to the driver, and the trunc-div
+    update over the bounded state."""
     import numpy as np
 
-    if _KMEANS_FORCE_RELATIONAL or unit != 10**6:
-        return None
+    if k < 1 or iters < 1:
+        raise ValueError(f"k-means: k and iters must be >= 1 ({k=}, {iters=})")
     draw = F.md5(
         F.concat(F.lit(seed_tag + "|"), F.col(id_col).cast("string"))
     )
@@ -911,107 +1008,34 @@ def _kmeans_kernel_state(
             .alias("cid"),
         )
     )
-    seed_rows = (
-        embeddings.join(seeds, embeddings[id_col] == seeds["_id"])
+    seed_rows = sorted(
+        (int(r["cid"]), r["_v"])
+        for r in embeddings.join(seeds, embeddings[id_col] == seeds["_id"])
         .select("cid", F.col(vec_col).alias("_v"))
         .collect()
+        if r["_v"]
     )
-    if not seed_rows:
-        return None
-    lens = {len(r["_v"]) for r in seed_rows if r["_v"] is not None}
-    if len(lens) != 1 or any(r["_v"] is None for r in seed_rows):
-        return None  # ragged/NULL seeds: per-position join semantics
-    dim = lens.pop()
-    if dim == 0 or len(seed_rows) * dim > _KMEANS_KERNEL_MAX_CELLS:
-        return None
-    cid_arr = np.array(sorted(r["cid"] for r in seed_rows), dtype=np.int64)
-    M = np.zeros((len(cid_arr), dim), dtype=np.int64)
-    by_cid = {int(r["cid"]): r["_v"] for r in seed_rows}
-    for i, c in enumerate(cid_arr):
-        M[i] = _kmeans_quantize(by_cid[int(c)])
-    return M, cid_arr
-
-
-def _kmeans_kernel_partials(M, cid_arr):
-    """mapInPandas closure: per batch, quantize the raw vectors, take
-    the exact int64 argmin (first occurrence = smallest cid — rows are
-    cid-sorted), and emit k x dim partial (count, sum) rows. Positions
-    beyond min(len(v), dim) contribute nothing, matching the relational
-    per-position inner join on ragged points."""
-    import numpy as np
-    import pandas as pd
-
-    dim = M.shape[1]
-
-    def fn(batches):
-        for pdf in batches:
-            out_c, out_p, out_n, out_s = [], [], [], []
-            bylen: dict[int, list] = {}
-            for v in pdf.iloc[:, 0].tolist():
-                if v is None or len(v) == 0:
-                    continue
-                bylen.setdefault(len(v), []).append(v)
-            for L, vs in bylen.items():
-                Lc = min(L, dim)
-                V = _kmeans_quantize(vs)
-                D = ((V[:, None, :Lc] - M[None, :, :Lc]) ** 2).sum(axis=2)
-                a = np.argmin(D, axis=1)
-                for ci in range(len(cid_arr)):
-                    mask = a == ci
-                    n = int(mask.sum())
-                    if n == 0:
-                        continue
-                    s = V[mask][:, :Lc].sum(axis=0)
-                    c = int(cid_arr[ci])
-                    for p in range(Lc):
-                        out_c.append(c)
-                        out_p.append(p)
-                        out_n.append(n)
-                        out_s.append(int(s[p]))
-            yield pd.DataFrame(
-                {"cid": out_c, "pos": out_p, "_n": out_n, "_s": out_s}
-            )
-
-    return fn
-
-
-def _kmeans_kernel_rounds(
-    embeddings: DataFrame,
-    M,
-    cid_arr,
-    iters: int,
-    vec_col: str,
-):
-    """Run ``iters`` Lloyd rounds: one Arrow corpus pass emitting k x
-    dim partial sums + one small Spark aggregate per round; the
-    trunc-div update runs on the driver over the bounded state. Returns
-    (M, n_members) after the final round."""
-    import numpy as np
-
+    cids = [c for c, _ in seed_rows]
+    cents = [_kmeans_quantize([v], unit)[0] for _, v in seed_rows]
+    nm = [np.zeros(len(c), dtype=np.int64) for c in cents]
+    row_of = {c: i for i, c in enumerate(cids)}
     vec_only = embeddings.select(vec_col)
-    nm = np.zeros(M.shape, dtype=np.int64)
-    for _ in range(iters):
+    for _ in range(iters if cents else 0):  # no centroid: nothing to train
         upd = (
             vec_only.mapInPandas(
-                _kmeans_kernel_partials(M, cid_arr),
+                _kmeans_kernel_partials(cents, cids, unit),
                 "cid long, pos int, _n long, _s long",
             )
             .groupBy("cid", "pos")
             .agg(F.sum("_n").alias("_n"), F.sum("_s").alias("_s"))
             .collect()
         )
-        got = {(int(r["cid"]), int(r["pos"])): (int(r["_n"]), int(r["_s"])) for r in upd}
-        newM = M.copy()
-        nm = np.zeros(M.shape, dtype=np.int64)
-        for i, c in enumerate(cid_arr):
-            for p in range(M.shape[1]):
-                hit = got.get((int(c), p))
-                if hit is not None:
-                    n, s = hit
-                    newM[i, p] = _kmeans_trunc_div(s, n)
-                    nm[i, p] = n
-        M = newM
-    return M, nm
+        nm = [np.zeros(len(c), dtype=np.int64) for c in cents]
+        for r in upd:
+            i, p = row_of[r["cid"]], r["pos"]
+            cents[i][p] = _kmeans_trunc_div(r["_s"], r["_n"])
+            nm[i][p] = r["_n"]
+    return cids, cents, nm
 
 
 def kmeans_lloyd(
@@ -1026,8 +1050,8 @@ def kmeans_lloyd(
     """Distributed k-means (Lloyd's algorithm) with a fixed iteration
     count, deterministic seeding, and FIXED-POINT arithmetic end to end
     — the clustering primitive behind IVF list training, corpus
-    bucketing, and semantic-diversity sampling, here as a pure dataflow
-    loop an external engine can replay bit-for-bit.
+    bucketing, and semantic-diversity sampling, here as a loop an
+    external engine can replay bit-for-bit.
 
     Determinism (the PageRank lesson applied to Lloyd's):
 
@@ -1044,106 +1068,44 @@ def kmeans_lloyd(
       ``md5(seed_tag || '|' || id)`` — the repo's coordination-free
       deterministic draw, reproducible by the oracle.
 
-    Scale shape: the point table explodes once to (id, pos, qv) rows
-    and is checkpointed (at 100 TB: persisted); each round is [join
-    with the BROADCAST (k x dim) centroid table -> per-(point,
-    candidate) integer sum -> argmin window -> one hash agg for the
-    update]. Shuffled bytes per round are the per-pair partial sums
-    (∝ points x k, 16-byte rows) and the update partials (∝ k x dim x
-    partitions) — never the raw vectors. Centroid state is k x dim
-    rows, checkpointed per round (the k-core lineage lesson).
+    Ragged input follows the per-position rule: centroid i keeps its
+    seed's length; a point's distance to it sums over the positions
+    both have; the update of (cid, pos) averages the members long
+    enough to reach pos (``n_members`` is per position). NULL and empty
+    vectors are never assigned; a NULL or empty seed gives no centroid,
+    and with no centroid at all the result is empty.
 
-    Overflow bound: requires unit^2 * dim * max(v)^2 < 2^63 — with the
-    1e6 default and unit-scale embeddings, safe to ~8000 dims.
+    Scale shape: the Lloyd rounds run as Spark jobs WHEN THE PLAN IS
+    BUILT (this call), and the returned relation is the final k x dim
+    state. Each round is one Arrow/NumPy pass over the corpus that
+    assigns points by the exact int64 argmin against the broadcast
+    centroids and emits per-(cid, pos) partial sums, then one small
+    aggregate collected to the driver for the trunc-div update. Shuffle
+    per round is the k x dim x partitions partials — never the raw
+    vectors — and the kernel's temporaries stay under a fixed byte
+    budget per chunk of rows.
+
+    Overflow bound: requires (2 * max|q|)^2 * dim < 2^63 with
+    q = floor(v * unit) — with the 1e6 default and unit-scale
+    embeddings, safe to ~2 million dims. Inputs past it, and NULL vector
+    elements, raise ValueError.
 
     Returns the LONG-form centroid table after ``iters`` rounds:
     (cid, pos, centroid_units, centroid, n_members), n_members from the
     final assignment.
     """
-    if k < 1 or iters < 1:
-        raise ValueError(f"kmeans_lloyd: k and iters must be >= 1 ({k=}, {iters=})")
-    state = _kmeans_kernel_state(embeddings, k, id_col, vec_col, unit, seed_tag)
-    if state is not None:
-        import numpy as np
-
-        M0, cid_arr = state
-        M, nm = _kmeans_kernel_rounds(embeddings, M0, cid_arr, iters, vec_col)
-        spark = embeddings.sparkSession
-        rows = [
-            (int(c), p, int(M[i, p]), int(M[i, p]) / float(unit), int(nm[i, p]))
-            for i, c in enumerate(cid_arr)
-            for p in range(M.shape[1])
-        ]
-        return spark.createDataFrame(
-            rows,
-            "cid long, pos long, centroid_units long, centroid double, "
-            "n_members long",
-        )
-    pts = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.col(vec_col)).alias("pos", "_v"),
-    ).select(
-        "_id",
-        "pos",
-        F.floor(F.col("_v").cast("double") * F.lit(float(unit)))
-        .cast("long")
-        .alias("qv"),
-    ).localCheckpoint(eager=True)
-    draw = F.md5(
-        F.concat(F.lit(seed_tag + "|"), F.col(id_col).cast("string"))
+    cids, cents, nm = _kmeans_train(
+        embeddings, k, iters, id_col, vec_col, unit, seed_tag
     )
-    seeds = (
-        embeddings.select(F.col(id_col).alias("_id"), draw.alias("_draw"))
-        .orderBy("_draw")
-        .limit(k)
-        .select(
-            "_id",
-            (F.row_number().over(Window.orderBy("_draw")) - 1)
-            .cast("long")
-            .alias("cid"),
-        )
-    )
-    centroids = (
-        pts.join(seeds, "_id")
-        .select("cid", "pos", F.col("qv").alias("qc"), F.lit(0).cast("long").alias("n_members"))
-        .localCheckpoint(eager=True)
-    )
-    w = Window.partitionBy("_id").orderBy(F.col("_d2").asc(), F.col("cid").asc())
-    for _ in range(iters):
-        diff = F.col("qv") - F.col("qc")
-        d = (
-            pts.join(F.broadcast(centroids.select("cid", "pos", "qc")), "pos")
-            .select("_id", "cid", (diff * diff).alias("_t"))
-            .groupBy("_id", "cid")
-            .agg(F.sum("_t").alias("_d2"))
-        )
-        assign = (
-            d.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select("_id", "cid")
-        )
-        upd = (
-            pts.join(assign, "_id")
-            .groupBy("cid", "pos")
-            .agg(F.count(F.lit(1)).alias("_n"), F.sum("qv").alias("_s"))
-            .select("cid", "pos", F.expr("_s div _n").alias("_qc_new"), "_n")
-        )
-        centroids = (
-            centroids.join(upd, ["cid", "pos"], "left")
-            .select(
-                "cid",
-                "pos",
-                F.coalesce("_qc_new", "qc").alias("qc"),
-                F.coalesce("_n", F.lit(0)).cast("long").alias("n_members"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return centroids.select(
-        "cid",
-        F.col("pos").cast("long").alias("pos"),
-        F.col("qc").cast("long").alias("centroid_units"),
-        (F.col("qc").cast("double") / F.lit(float(unit))).alias("centroid"),
-        "n_members",
+    rows = [
+        (cid, p, int(c[p]), int(c[p]) / float(unit), int(n[p]))
+        for cid, c, n in zip(cids, cents, nm)
+        for p in range(len(c))
+    ]
+    return embeddings.sparkSession.createDataFrame(
+        rows,
+        "cid long, pos long, centroid_units long, centroid double, "
+        "n_members long",
     )
 
 
@@ -1362,147 +1324,93 @@ def kmeans_assign(
     assigning every vector to its trained centroid (ties to the smaller
     cid) — the deterministic (id, cid, _d2) assignment table that
     SemDeDup, cluster labeling, and IVF-style bucketing all start from.
-    Centroids (k x dim) broadcast; shuffle is the per-(point, cid)
-    integer partial sums, never raw vectors."""
-    state = _kmeans_kernel_state(embeddings, k, id_col, vec_col, unit, seed_tag)
-    if state is not None:
-        import numpy as np
+    The pass is one lazy Arrow/NumPy map over the corpus with the
+    trained centroids (k x dim) in its closure; nothing shuffles. NULL
+    and empty vectors get no row."""
+    cids, cents, _ = _kmeans_train(
+        embeddings, k, iters, id_col, vec_col, unit, seed_tag
+    )
+
+    def assign_fn(batches):
         import pandas as pd
 
-        M0, cid_arr = state
-        M, _ = _kmeans_kernel_rounds(embeddings, M0, cid_arr, iters, vec_col)
-        dim = M.shape[1]
+        for pdf in batches:
+            ids, cid_out, d2s = [], [], []
+            raw_ids = pdf.iloc[:, 0].tolist()
+            for idx, Q in _kmeans_length_groups(pdf.iloc[:, 1].tolist(), unit):
+                a, d2 = _kmeans_nearest(Q, cents)
+                ids += [raw_ids[i] for i in idx]
+                cid_out += [cids[i] for i in a]
+                d2s += d2.tolist()
+            yield pd.DataFrame({"_id": ids, "cid": cid_out, "_d2": d2s})
 
-        def assign_fn(batches):
-            for pdf in batches:
-                ids, cids, d2s = [], [], []
-                bylen: dict[int, list] = {}
-                for _id, v in zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()):
-                    if v is None or len(v) == 0:
-                        continue
-                    bylen.setdefault(len(v), []).append((_id, v))
-                for L, pairs in bylen.items():
-                    Lc = min(L, dim)
-                    V = _kmeans_quantize([v for _, v in pairs])
-                    D = ((V[:, None, :Lc] - M[None, :, :Lc]) ** 2).sum(axis=2)
-                    a = np.argmin(D, axis=1)
-                    best = D[np.arange(len(pairs)), a]
-                    for j, (_id, _) in enumerate(pairs):
-                        ids.append(_id)
-                        cids.append(int(cid_arr[a[j]]))
-                        d2s.append(int(best[j]))
-                yield pd.DataFrame({"_id": ids, "cid": cids, "_d2": d2s})
-
-        id_type = dict(embeddings.dtypes)[id_col]
-        return embeddings.select(
-            F.col(id_col).alias("_id"), F.col(vec_col)
-        ).mapInPandas(assign_fn, f"_id {id_type}, cid long, _d2 long")
-    cents = kmeans_lloyd(
-        embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        unit=unit, seed_tag=seed_tag,
-    ).select("cid", "pos", F.col("centroid_units").alias("qc"))
-    pts = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.col(vec_col)).alias("pos", "_v"),
-    ).select(
-        "_id",
-        "pos",
-        F.floor(F.col("_v").cast("double") * F.lit(float(unit)))
-        .cast("long")
-        .alias("qv"),
-    )
-    diff = F.col("qv") - F.col("qc")
-    d = (
-        pts.join(F.broadcast(cents), "pos")
-        .select("_id", "cid", (diff * diff).alias("_t"))
-        .groupBy("_id", "cid")
-        .agg(F.sum("_t").alias("_d2"))
-    )
-    w_assign = Window.partitionBy("_id").orderBy(F.col("_d2").asc(), F.col("cid").asc())
-    return (
-        d.withColumn("_rk", F.row_number().over(w_assign))
-        .filter(F.col("_rk") == 1)
-        .select("_id", "cid", "_d2")
+    id_type = dict(embeddings.dtypes)[id_col]
+    # no centroid (all seeds NULL/empty): same schema, no rows
+    pts = embeddings if cents else embeddings.limit(0)
+    return pts.select(F.col(id_col).alias("_id"), F.col(vec_col)).mapInPandas(
+        assign_fn, f"_id {id_type}, cid long, _d2 long"
     )
 
 
-# Memory gate for the Arrow pair screen: a group's m x m cosine matrix
-# is float64, so 4096 members = 128 MB per task — anything larger keeps
-# the relational self-join, which streams instead of materializing the
-# group (the SemDeDup design keeps clusters ~n/k, far below this).
-_SEMDEDUP_KERNEL_MAX_CLUSTER = 4096
-
-
-def _semantic_dedup_kernel_screen(
+def _semantic_dedup_screen(
     assign: DataFrame,
     embeddings: DataFrame,
     threshold: float,
     id_col: str,
     vec_col: str,
     unit: int,
-):
+) -> DataFrame:
     """SemDeDup's greedy upper-triangular screen as ONE applyInPandas
-    pass per cluster (guide §4.2): the relational pair self-join
-    evaluates an interpreted higher-order dot per candidate pair (no
-    codegen for HOFs — measured 3.2 s of the 5.3 s wall at sf0.1);
-    int64 Q @ Q.T plus the identical sqrt/divide IEEE ops reproduce
-    every cosine bit-for-bit. Returns None (caller keeps the relational
-    path) when the force hook is set, the unit is non-default, or any
-    cluster exceeds the matrix-memory gate — the gate reads a k-row
-    aggregate over the persisted carry relation, the bounded-action
-    rule."""
-    if _KMEANS_FORCE_RELATIONAL or unit != 10**6:
-        return None
-    import numpy as np
-    import pandas as pd
-
-    carry = assign.join(
-        embeddings.select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-        ),
-        "_id",
-    ).persist()
-    sizes = carry.groupBy("cid").agg(F.count(F.lit(1)).alias("_n")).collect()
-    if not sizes or max(r["_n"] for r in sizes) > _SEMDEDUP_KERNEL_MAX_CLUSTER:
-        carry.unpersist()
-        return None
+    pass per cluster (guide §4.2): int64 Q @ Q.T plus the identical
+    sqrt/divide IEEE ops of the SQL twin reproduce every cosine
+    bit-for-bit. Members of different lengths pair to a NULL cosine
+    (Spark's ``zip_with`` NULL-pads, so the dot is NULL), as do
+    zero-norm members. Each length group's dots run in row blocks
+    (``_kmeans_chunks``), so any cluster size fits."""
     thr = float(threshold)
 
-    def screen(pdf: pd.DataFrame) -> pd.DataFrame:
+    def screen(pdf):
+        import numpy as np
+        import pandas as pd
+
         # rank = (d2 to own centroid DESC, id ASC) — row_number order
         pdf = pdf.sort_values(
             ["_d2", "_id"], ascending=[False, True], kind="mergesort"
         ).reset_index(drop=True)
-        m = len(pdf)
-        Q = _kmeans_quantize(pdf["_v"].tolist()) if m else None
-        out_sim = [None] * m
-        if m:
+        sim = np.full(len(pdf), np.nan)  # NaN -> NULL: no prior cosine
+        for idx, Q in _kmeans_length_groups(pdf["_v"].tolist(), unit):
             nq = (Q * Q).sum(axis=1)  # int64, exact by the overflow bound
-            D = Q @ Q.T  # exact int64 dots
-            sq = np.sqrt(nq.astype(np.float64))
-            valid = nq > 0
-            for i in range(1, m):
-                if not valid[i]:
-                    continue  # zero-norm: cosines NULL, always kept
-                js = np.nonzero(valid[:i])[0]
-                if len(js) == 0:
-                    continue
+            valid = nq > 0  # zero-norm: cosines NULL, always kept
+            sq = np.sqrt(np.where(valid, nq, 1).astype(np.float64))
+            for sl in _kmeans_chunks(len(idx), len(idx)):
+                r1 = sl.stop
                 # the same two IEEE ops as the SQL expression, in the
                 # same order: int dot -> double, / (sqrt(na) * sqrt(nb))
-                cos = D[i, js].astype(np.float64) / (sq[i] * sq[js])
-                out_sim[i] = float(cos.max())
+                cos = (Q[sl] @ Q[:r1].T).astype(np.float64) / (
+                    sq[sl, None] * sq[None, :r1]
+                )
+                prior = (
+                    valid[sl, None]
+                    & valid[None, :r1]
+                    & (np.arange(r1)[None, :] < np.arange(sl.start, r1)[:, None])
+                )
+                cos[~prior] = -np.inf
+                hit = prior.any(axis=1)
+                sim[idx[sl][hit]] = cos.max(axis=1)[hit]
         return pd.DataFrame(
             {
                 "_id": pdf["_id"],
                 "cid": pdf["cid"],
-                "rk": np.arange(1, m + 1, dtype=np.int64),
-                "max_prior_sim": pd.array(out_sim, dtype="float64"),
-                "kept": pd.array(
-                    [s is None or s < thr for s in out_sim], dtype="boolean"
-                ),
+                "rk": np.arange(1, len(pdf) + 1, dtype=np.int64),
+                "max_prior_sim": sim,
+                "kept": ~(sim >= thr),
             }
         )
 
+    carry = assign.join(
+        embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
+        "_id",
+    )
     id_type = dict(assign.dtypes)["_id"]
     out = carry.groupBy("cid").applyInPandas(
         screen,
@@ -1550,13 +1458,20 @@ def semantic_dedup(
       bit-identical cross-engine (no float-accumulation order risk);
     - a vector whose QUANTIZED norm is zero (e.g. float32 subnormals)
       has no direction: its pair cosines are NULL, so it is always
-      kept and never screens another member.
+      kept and never screens another member;
 
-    Scale shape: centroids (k x dim) broadcast for the assignment pass;
-    the pair stage is an equi-join on cid — work sum(|cluster|^2) * dim,
-    THE SemDeDup design cost, controlled by k (the paper runs 50k
-    clusters on LAION; cluster size ~ n/k keeps the quadratic local).
-    No all-pairs path: pairs never cross cluster boundaries.
+    - members of different lengths have a NULL pair cosine (the SQL
+      twin's ``zip_with`` NULL-pads the shorter vector).
+
+    Scale shape: the k-means rounds run when the plan is built (see
+    ``kmeans_lloyd``); the assignment is a lazy Arrow map with the
+    k x dim centroids in its closure. The pair stage shuffles each
+    member's vector once to its cluster (one exchange on cid) and
+    screens the cluster in one Arrow/NumPy pass of int64 dot blocks
+    under a fixed byte budget — work sum(|cluster|^2) * dim, THE
+    SemDeDup design cost, controlled by k (the paper runs 50k clusters
+    on LAION; cluster size ~ n/k keeps the quadratic local). No
+    all-pairs path: pairs never cross cluster boundaries.
 
     Returns one row per input vector: (id, cid, rk, max_prior_sim,
     kept) — max_prior_sim is NULL for each cluster's first-ranked
@@ -1566,69 +1481,8 @@ def semantic_dedup(
         embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
         unit=unit, seed_tag=seed_tag,
     )
-    screened = _semantic_dedup_kernel_screen(
+    return _semantic_dedup_screen(
         assign, embeddings, threshold, id_col, vec_col, unit
-    )
-    if screened is not None:
-        return screened
-    qarr = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x.cast("double") * F.lit(float(unit))).cast("long"),
-        ).alias("_q"),
-    )
-    int_self_dot = F.aggregate(
-        F.col("_q"), F.lit(0).cast("long"), lambda acc, v: acc + v * v
-    )
-    w_rank = Window.partitionBy("cid").orderBy(F.col("_d2").desc(), F.col("_id").asc())
-    members = (
-        assign.join(qarr, "_id")
-        .select("_id", "cid", "_d2", "_q", int_self_dot.alias("_nq"))
-        .withColumn("rk", F.row_number().over(w_rank))
-        .localCheckpoint(eager=True)
-    )
-    a = members.select(
-        F.col("_id").alias("id_a"), "cid", F.col("rk").alias("rk_a"),
-        F.col("_q").alias("qa"), F.col("_nq").alias("na"),
-    )
-    b = members.select(
-        F.col("_id").alias("id_b"), "cid", F.col("rk").alias("rk_b"),
-        F.col("_q").alias("qb"), F.col("_nq").alias("nb"),
-    )
-    int_dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    # zero-quantized-norm vectors carry no direction: their cosine is
-    # UNDEFINED (NULL) — they are always kept and never screen others
-    # (max ignores NULLs). Explicit CASE in both engines, no div-by-0.
-    cos = F.when(
-        (F.col("na") > 0) & (F.col("nb") > 0),
-        int_dot.cast("double")
-        / (F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))),
-    )
-    prior = (
-        a.join(b, "cid")
-        .filter(F.col("rk_b") < F.col("rk_a"))
-        .select("id_a", cos.alias("_cos"))
-        .groupBy("id_a")
-        .agg(F.max("_cos").alias("max_prior_sim"))
-    )
-    return (
-        members.select(F.col("_id").alias(id_col), "cid", "rk")
-        .join(prior.withColumnRenamed("id_a", id_col), id_col, "left")
-        .select(
-            id_col,
-            "cid",
-            F.col("rk").cast("long").alias("rk"),
-            "max_prior_sim",
-            (
-                F.col("max_prior_sim").isNull()
-                | (F.col("max_prior_sim") < F.lit(float(threshold)))
-            ).alias("kept"),
-        )
     )
 
 

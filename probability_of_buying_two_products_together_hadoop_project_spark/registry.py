@@ -7688,11 +7688,13 @@ def _semantic_dedup_oracle(
     "corpus in fixed-point integer arithmetic — quantized components, "
     "integer squared-L2 distances (order-independent argmins, ties to "
     "the smaller cid), trunc-division centroid updates, md5-draw "
-    "seeding the oracle reproduces. Per round: broadcast (k x dim) "
-    "centroids onto the exploded point table, per-pair integer sums, "
-    "argmin window, one update agg — shuffle ∝ points x k partial "
-    "sums, never raw vectors; state checkpointed per round (the "
-    "k-core lineage lesson)",
+    "seeding the oracle reproduces. Per round: one Arrow/NumPy pass "
+    "over the corpus takes the exact int64 argmin against the (k x dim) "
+    "centroids in chunks under a fixed byte budget and emits per-(cid, "
+    "pos) partial sums; one small aggregate goes to the driver for the "
+    "trunc-div update — shuffle ∝ k x dim x partitions, never raw "
+    "vectors. The rounds run when the plan is built; the query reads "
+    "the final k x dim state",
 )
 def q_kmeans(spark, sf_dir):
     return similarity.kmeans_lloyd(

@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (single JVM); the configs
-below are chosen so the same code scales to a real cluster:
+Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (single JVM; unset means
+the host's CPU count); the configs below are chosen so the same code
+scales to a real cluster:
 
 - AQE on (coalesce + skew-join): runtime re-planning replaces the
   reference's static hand-tuned reducer counts
@@ -24,9 +25,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else os.cpu_count() or 1
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))

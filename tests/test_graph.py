@@ -685,6 +685,34 @@ def test_truss_peel_packed_edge_keys_match_pair_loop(spark):
     assert sorted(map(tuple, fallback)) == sorted(map(tuple, base))
 
 
+def test_truss_peel_rejects_out_of_range_tri0_ids(spark):
+    # sup0's ids pass the packing gate, but one tri0 id sits past 2^32
+    # and would alias another edge's packed key: the job must fail
+    import pytest
+
+    rows = [
+        ("u", str(a), str(b))
+        for a in range(9)
+        for b in range(9)
+        if a != b and (a + b) % 3 != 0
+    ]
+    pairs = spark.createDataFrame(
+        rows, "c string, item string, neighbor string"
+    )
+    sig, tri = graph.scan_edge_similarity(pairs, return_triangles=True)
+    sup0 = sig.select(
+        F.col("item_a").cast("long").alias("lo"),
+        F.col("item_b").cast("long").alias("hi"),
+        (F.col("common_closed") - 2).cast("long").alias("sup"),
+    )
+    tri_long = tri.select(*[F.col(c).cast("long").alias(c) for c in tri.columns])
+    bad = tri_long.limit(1).withColumn("hi1", F.col("hi1") + (1 << 32))
+    with pytest.raises(Exception, match="outside"):
+        graph.truss_peel(
+            pairs, rounds=2, sup0=sup0, tri0=tri_long.unionByName(bad)
+        ).collect()
+
+
 def test_triangle_stats_from_similarity_matches_self_contained(spark):
     # the registry derives triangle_count_items from the shared sigma;
     # the derived form must be row-identical to the wedge pipeline

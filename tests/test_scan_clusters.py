@@ -89,3 +89,14 @@ def test_scan_clusters_rejects_bad_params(spark):
     df = spark.createDataFrame([("a", "b")], "item string, neighbor string")
     with pytest.raises(ValueError):
         graph.scan_clusters(df, mu=0)
+
+
+def test_scan_clusters_rejects_bad_eps_rank(spark):
+    # an eps rank outside [1, den) picks no sigma and would silently
+    # return an empty clustering
+    import pytest
+
+    df = spark.createDataFrame([("a", "b")], "item string, neighbor string")
+    for num, den in ((0, 4), (4, 4), (5, 4)):
+        with pytest.raises(ValueError, match="eps_rank_num"):
+            graph.scan_clusters(df, eps_rank_num=num, eps_rank_den=den)

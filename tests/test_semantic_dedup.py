@@ -5,60 +5,41 @@ fixed-point k-means + quantized-cosine greedy screen the DuckDB oracle
 also replays).
 """
 
-import hashlib
 import math
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from probability_of_buying_two_products_together_hadoop_project_spark.operators import similarity
-
-UNIT = 10**6
-
-
-def trunc_div(a: int, b: int) -> int:
-    q = abs(a) // b
-    return -q if a < 0 else q
+from tests.test_kmeans import UNIT, py_assign, py_kmeans
 
 
-def py_semantic_dedup(vecs: dict[int, list[float]], k: int, iters: int, threshold: float):
-    """Independent mirror: fixed-point Lloyd's, final integer argmin
-    assignment, rank = (d2 DESC, id), drop iff an earlier-ranked member
-    of the same cluster has quantized cosine >= threshold."""
+def py_semantic_dedup(
+    vecs: dict, k: int, iters: int, threshold: float, unit: int = UNIT
+):
+    """Independent mirror: fixed-point Lloyd's (``py_kmeans``), final
+    integer argmin assignment, rank = (d2 DESC, id), drop iff an
+    earlier-ranked member of the same cluster has quantized cosine >=
+    threshold. A pair's cosine is NULL (never screens) when either
+    quantized norm is 0 or the lengths differ — the SQL twin's
+    ``zip_with`` NULL-pads the shorter vector."""
     import numpy as np
 
     # the embedding column is float32: quantize from the float32 value,
     # exactly as the engine's double cast of the stored float does
-    q = {
-        i: [math.floor(float(np.float32(v)) * float(UNIT)) for v in vs]
+    f32 = {
+        i: None if vs is None else [float(np.float32(v)) for v in vs]
         for i, vs in vecs.items()
     }
-    draws = sorted((hashlib.md5(f"km|{i}".encode()).hexdigest(), i) for i in vecs)
-    cents = {cid: list(q[i]) for cid, (_, i) in enumerate(draws[:k])}
-    assign: dict[int, tuple[int, int]] = {}
-    for _ in range(iters):
-        assign = {
-            i: min(
-                (sum((a - b) ** 2 for a, b in zip(qv, c)), cid)
-                for cid, c in cents.items()
-            )
-            for i, qv in q.items()
-        }
-        for cid, c in list(cents.items()):
-            members = [q[i] for i, (_, a) in assign.items() if a == cid]
-            if members:
-                cents[cid] = [
-                    trunc_div(sum(m[p] for m in members), len(members))
-                    for p in range(len(c))
-                ]
-    # final assignment against the trained centroids
-    assign = {
-        i: min(
-            (sum((a - b) ** 2 for a, b in zip(qv, c)), cid)
-            for cid, c in cents.items()
-        )
-        for i, qv in q.items()
+    cents = py_kmeans(f32, k, iters, unit)
+    q = {
+        i: [math.floor(v * float(unit)) for v in vs]
+        for i, vs in f32.items()
+        if vs
     }
+    # final assignment against the trained centroids
+    assign = py_assign(q, cents)
+    norm = {i: sum(a * a for a in qv) for i, qv in q.items()}
     out = {}
     by_cluster: dict[int, list[int]] = {}
     for i, (d2, cid) in assign.items():
@@ -68,25 +49,25 @@ def py_semantic_dedup(vecs: dict[int, list[float]], k: int, iters: int, threshol
         for pos, i in enumerate(ranked):
             best = None
             for j in ranked[:pos]:
-                ni = sum(a * a for a in q[i])
-                nj = sum(a * a for a in q[j])
-                if ni == 0 or nj == 0:
-                    continue  # zero-norm: cosine undefined, never screens
+                if norm[i] == 0 or norm[j] == 0 or len(q[i]) != len(q[j]):
+                    continue  # NULL cosine: never screens
                 dot = sum(a * b for a, b in zip(q[i], q[j]))
-                cos = float(dot) / (math.sqrt(float(ni)) * math.sqrt(float(nj)))
+                cos = float(dot) / (
+                    math.sqrt(float(norm[i])) * math.sqrt(float(norm[j]))
+                )
                 best = cos if best is None else max(best, cos)
             out[i] = (cid, pos + 1, best, best is None or best < threshold)
     return out
 
 
-def _run(spark, vecs, k=2, iters=2, threshold=0.9):
+def _run(spark, vecs, k=2, iters=2, threshold=0.9, unit=UNIT):
     df = spark.createDataFrame(
         [(i, v) for i, v in vecs.items()], "vec_id bigint, embedding array<float>"
     )
     return {
         r.vec_id: (r.cid, r.rk, r.max_prior_sim, r.kept)
         for r in similarity.semantic_dedup(
-            df, k=k, iters=iters, threshold=threshold
+            df, k=k, iters=iters, threshold=threshold, unit=unit
         ).collect()
     }
 
@@ -173,3 +154,32 @@ def test_zero_quantized_norm_is_kept_and_never_screens(spark):
     assert got == want
     assert got[1][3] is True  # zero-norm member kept
     assert got[1][2] is None or got[1][1] == 1
+
+
+def test_semantic_dedup_ragged_null_and_empty_vectors_match_reference(spark):
+    """Ragged points and seeds, a NULL and an empty vector (never
+    assigned, so absent), near-duplicates within and across lengths:
+    cross-length pairs have a NULL cosine and never screen."""
+    vecs = {}
+    for i in range(48):
+        base = [1.0, 0.5, -0.25, 0.0, 0.1][: 2 + i % 4]
+        vecs[i] = [x + 0.001 * (i % 3) for x in base]
+    vecs[48] = None
+    vecs[49] = []
+    for unit in (UNIT, 10**3):
+        got = _run(spark, vecs, k=3, iters=2, threshold=0.99, unit=unit)
+        assert got == py_semantic_dedup(vecs, k=3, iters=2, threshold=0.99, unit=unit)
+        assert 48 not in got and 49 not in got
+        assert not all(v[3] for v in got.values())
+
+
+def test_semantic_dedup_cluster_spanning_several_blocks_matches_reference(spark):
+    """One 2,100-member cluster: its m x m dot matrix exceeds the fixed
+    byte budget, so the screen runs it in row blocks whose members must
+    still see every earlier-ranked member."""
+    n = 2100
+    assert n * n * 8 > similarity._KMEANS_KERNEL_BYTES
+    vecs = {i: [((i * 7) % 13 - 6) / 6.0, ((i * 5) % 11 - 5) / 5.0] for i in range(n)}
+    got = _run(spark, vecs, k=1, iters=1, threshold=0.999)
+    assert got == py_semantic_dedup(vecs, k=1, iters=1, threshold=0.999)
+    assert 0 < sum(v[3] for v in got.values()) < n
